@@ -13,8 +13,9 @@ Shared argument surface::
              --fieldSeparator=X (separator for --raw intermediate-format
              output; default U+001F)  --raw (emit the reference's
              intermediate separator-joined fields, unformatted/unsorted)
-             --silent  --v  --r/--l (accepted; Spark always plans the
-             sort itself — the local/remote split is obsolete here)
+             --silent  --v  --r/--l (accepted no-ops: the sort is picked
+             from the observed result size, LogTools' local-vs-remote
+             choice made at run time — see operators.util.small_sort)
              --skipCorrupt (salvage damaged .bm trees: resync past
              corrupt container blocks instead of failing the run)
 
@@ -44,6 +45,8 @@ from bb_bigdata_log_tools_spark.operators import logops
 from bb_bigdata_log_tools_spark.sources.boom import read_boom
 
 DATA_MARKER = ";#################### DATA MARKER ####################"
+
+REQUIRED = ["dc", "svc", "comp", "start", "end"]
 
 DATE_FORMATS = [
     "%b %d, %Y %H:%M",
@@ -170,28 +173,15 @@ def _emit(df: DataFrame, opts: dict) -> None:
             F.concat_ws(sep, *[F.col(c).cast("string") for c in cols]).alias("line")
         )
     else:
-        # LogTools-style local-vs-remote sort pick (reference
-        # src/com/blackberry/logtools/LogTools.java decides --l/--r by
-        # estimated result size): --r forces the range-partitioned
-        # distributed orderBy, --l forces the single-partition local
-        # sort, and the default AUTO-picks by the actual filtered row
-        # count — small results skip the range sampler's second parent
-        # pass entirely (small_sort), huge ones spill to the
-        # distributed orderBy above its row threshold.
+        # LogTools picks the local or remote sort by result size
+        # (LogTools.java --l/--r); small_sort makes the same pick from
+        # the row count it observes, so --l/--r change nothing
         from bb_bigdata_log_tools_spark.operators.util import small_sort
 
         out = logops.format_and_sort(df, date_format=date_format, sort=False)
-        sort_cols = [
-            c
-            for c in ("ts", "create_time", "block_no", "line_no")
-            if c in out.columns
-        ]
-        if "r" in opts["flags"]:
-            out = out.orderBy(*sort_cols)
-        elif "l" in opts["flags"]:
-            out = out.repartition(1).sortWithinPartitions(*sort_cols)
-        else:
-            out = small_sort(out, *sort_cols)
+        out = small_sort(
+            out, *[c for c in logops.ORDER_COLUMNS if c in out.columns]
+        )
     silent = "silent" in opts["flags"]
     if not silent:
         sys.stderr.write(DATA_MARKER + "\n")
@@ -218,9 +208,7 @@ def _emit(df: DataFrame, opts: dict) -> None:
 def _load(opts: dict, tool: str, extra: list[str]) -> tuple:
     """Validate args and resolve paths BEFORE starting the JVM — bad
     invocations fail in milliseconds, not after a Spark session boot."""
-    dc, svc, comp, start_s, end_s = _require(
-        opts, tool, ["dc", "svc", "comp", "start", "end"]
-    )
+    dc, svc, comp, start_s, end_s = _require(opts, tool, REQUIRED)
     values = [opts.get(k) for k in extra]
     if any(v is None for v in values):
         _require(opts, tool, extra)
@@ -232,15 +220,10 @@ def _load(opts: dict, tool: str, extra: list[str]) -> tuple:
     if not paths:
         sys.stderr.write("; no matching log directories\n")
         raise SystemExit(0)
-    spark = _spark()
-    # --skipCorrupt: salvage damaged .bm trees (sync-marker resync past
-    # corrupt blocks) instead of failing the run — see read_boom
-    skip_corrupt = "skipCorrupt" in opts["flags"]
-    df = read_boom(spark, paths[0], skip_corrupt=skip_corrupt)
-    for extra_path in paths[1:]:
-        df = df.unionByName(
-            read_boom(spark, extra_path, skip_corrupt=skip_corrupt)
-        )
+    # one scan over every hourly directory, as the reference's single
+    # map-only job (Spark packs the files into splits); --skipCorrupt
+    # resyncs past corrupt .bm blocks instead of failing the run
+    df = read_boom(_spark(), paths, skip_corrupt="skipCorrupt" in opts["flags"])
     return df, start_ms, end_ms, values
 
 
@@ -274,23 +257,38 @@ def loggrep(argv: list[str]) -> None:
     )
 
 
+def _read_terms(strings_path: str) -> list[str]:
+    """The -strings file, or every file of a -strings directory: one
+    term per non-blank line."""
+    terms: list[str] = []
+    try:
+        paths = (
+            [os.path.join(strings_path, f) for f in sorted(os.listdir(strings_path))]
+            if os.path.isdir(strings_path)
+            else [strings_path]
+        )
+        for p in paths:
+            with open(p, encoding="utf-8") as f:
+                # dos2unix normalization, as the reference does for Windows files
+                terms.extend(
+                    line.strip().replace("\r", "") for line in f if line.strip()
+                )
+    except (OSError, UnicodeDecodeError) as exc:
+        raise SystemExit(f";******************** ERROR: cannot read -strings: {exc}")
+    if not terms:
+        raise SystemExit(
+            f";******************** ERROR: no search terms in {strings_path}"
+        )
+    return terms
+
+
 def logmultisearch(argv: list[str]) -> None:
     opts = parse_args(argv)
-    df, start_ms, end_ms, (strings_path,) = _load(
-        opts, "logmultisearch", ["strings"]
-    )
-    terms: list[str] = []
-    paths = (
-        [os.path.join(strings_path, f) for f in sorted(os.listdir(strings_path))]
-        if os.path.isdir(strings_path)
-        else [strings_path]
-    )
-    for p in paths:
-        with open(p, encoding="utf-8") as f:
-            # dos2unix normalization, as the reference does for Windows files
-            terms.extend(
-                line.strip().replace("\r", "") for line in f if line.strip()
-            )
+    # the term files are read before _load starts the JVM, like every
+    # other argument check
+    *_, strings_path = _require(opts, "logmultisearch", [*REQUIRED, "strings"])
+    terms = _read_terms(strings_path)
+    df, start_ms, end_ms, _ = _load(opts, "logmultisearch", [])
     _emit(
         logops.multisearch(
             df,

@@ -23,7 +23,9 @@ but rendered declaratively so AQE can size the sort partitions.
 
 from __future__ import annotations
 
+import operator
 import re
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -34,6 +36,9 @@ from bb_bigdata_log_tools_spark.operators.util import small_sort
 #: Columns of the intermediate "raw lines" record, mirroring
 #: Cat.java's mapper output order.
 RAW_COLUMNS = ["ts", "message", "event_id", "create_time", "block_no", "line_no"]
+
+#: The formatAndSort.pg total order; a row with a null here is bad data.
+ORDER_COLUMNS = ("ts", "create_time", "block_no", "line_no")
 
 
 def _time_window(df: DataFrame, start_ms: int | None, end_ms: int | None) -> DataFrame:
@@ -159,29 +164,24 @@ def format_and_sort(
     ``sort=False`` + per-hour partition ordering where a total order
     isn't required.
     """
+    sort_cols = [c for c in ORDER_COLUMNS if c in df.columns]
     good = df
-    for c in ("ts", "create_time", "block_no", "line_no"):
-        if c in df.columns:
-            good = good.filter(F.col(c).isNotNull())
+    for c in sort_cols:
+        good = good.filter(F.col(c).isNotNull())
     out = good.withColumn(
         "line",
         F.concat_ws(" ", format_timestamp(F.col("ts"), date_format), F.col("message")),
     )
     if sort:
-        sort_cols = [c for c in ("ts", "create_time", "block_no", "line_no") if c in out.columns]
         out = out.orderBy(*sort_cols)
     return out.select("line", *[c for c in RAW_COLUMNS if c in out.columns])
 
 
 def bad_lines(df: DataFrame) -> DataFrame:
     """The Pig script's ``bad_data`` leg: rows with any null ordering field."""
-    cond = (
-        F.col("ts").isNull()
-        | F.col("create_time").isNull()
-        | F.col("block_no").isNull()
-        | F.col("line_no").isNull()
+    return df.filter(
+        reduce(operator.or_, [F.col(c).isNull() for c in ORDER_COLUMNS])
     )
-    return df.filter(cond)
 
 
 def log_json_field_stats(logs: DataFrame, field: str = "k") -> DataFrame:

@@ -36,7 +36,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bb_bigdata_log_tools_spark.schema import LOG_SCHEMA
+from bb_bigdata_log_tools_spark.schema import LOG_COLUMNS, LOG_SCHEMA
 
 MAGIC = b"Obj\x01"
 
@@ -164,28 +164,73 @@ class _Decoder:
         raise ValueError(f"unsupported avro type: {schema!r}")
 
 
-def read_container_blocks(data: bytes) -> Iterator[tuple[dict, int, bytes]]:
-    """Yield (writer_schema, record_count, decompressed_payload) per
-    container block — the seam that lets a search prefilter byte-scan a
-    block BEFORE paying for record decode (FastSearch parity; see
-    ``scan_boom_bytes``)."""
+def _parse_boom_header(data) -> tuple[dict, bytes, int, str]:
+    """(schema, sync, header_end, codec) of an Avro container held in
+    ``data`` (bytes or a mmap) — the one header parser every reader
+    shares. Raises ValueError on a bad magic or a codec other than
+    deflate/null; other damage raises whatever the decode hits."""
     dec = _Decoder(data)
     if dec.read_fixed(4) != MAGIC:
         raise ValueError("not an Avro container file (bad magic)")
     meta = dec.read_map_of_bytes()
     schema = json.loads(meta["avro.schema"])
     codec = meta.get("avro.codec", b"null").decode()
+    if codec not in ("deflate", "null"):
+        raise ValueError(f"unsupported codec: {codec}")
     sync = dec.read_fixed(16)
-    while dec.pos < len(dec.buf):
+    return schema, sync, dec.pos, codec
+
+
+def _try_block(mm, pos: int, sync: bytes, codec: str):
+    """Attempt to parse the block starting at ``pos``; return
+    (records_payload, count, next_pos) or None if ``pos`` is not a real
+    block boundary (false sync match inside a payload)."""
+    try:
+        dec = _Decoder(mm)
+        dec.pos = pos
         count = dec.read_long()
         size = dec.read_long()
-        payload = dec.read_fixed(size)
+        if count <= 0 or size <= 0 or dec.pos + size + 16 > len(mm):
+            return None
+        payload = bytes(mm[dec.pos : dec.pos + size])
+        dec.pos += size
+        if bytes(mm[dec.pos : dec.pos + 16]) != sync:
+            return None
         if codec == "deflate":
             payload = zlib.decompress(payload, -15)
-        elif codec != "null":
-            raise ValueError(f"unsupported codec: {codec}")
-        block_sync = dec.read_fixed(16)
-        if block_sync != sync:
+        return payload, count, dec.pos + 16
+    except Exception:  # noqa: BLE001 — any parse failure = not a boundary
+        return None
+
+
+def _next_block(mm, search_from: int, limit: int, sync: bytes, codec: str):
+    """Offset of the first VALIDATED block whose preceding sync marker
+    starts in ``[search_from, limit)``, or None. A real boundary must
+    parse as (count, size, payload, trailing sync); marker bytes that
+    happen to occur inside a payload are skipped."""
+    while True:
+        hit = mm.find(sync, search_from)
+        if hit < 0 or hit >= limit:
+            return None
+        if _try_block(mm, hit + 16, sync, codec) is not None:
+            return hit + 16
+        search_from = hit + 1
+
+
+def read_container_blocks(data: bytes) -> Iterator[tuple[dict, int, bytes]]:
+    """Yield (writer_schema, record_count, decompressed_payload) per
+    container block — the seam that lets a search prefilter byte-scan a
+    block BEFORE paying for record decode (FastSearch parity; see
+    ``scan_boom_bytes``). Strict: any damage raises."""
+    schema, sync, pos, codec = _parse_boom_header(data)
+    dec = _Decoder(data)
+    dec.pos = pos
+    while dec.pos < len(data):
+        count = dec.read_long()
+        payload = dec.read_fixed(dec.read_long())
+        if codec == "deflate":
+            payload = zlib.decompress(payload, -15)
+        if dec.read_fixed(16) != sync:
             raise ValueError("sync marker mismatch — corrupt container")
         yield schema, count, payload
 
@@ -195,45 +240,32 @@ def read_container_blocks_resync(data: bytes) -> Iterator[tuple[dict, int, bytes
     corrupt blocks — the Avro container's sync markers exist precisely
     so a reader can recover mid-stream. Where the strict reader raises
     (fail the task, the default ingest posture), this one scans
-    forward for the next VALIDATED block boundary (the split reader's
-    `_try_block` discipline: a real boundary must parse as count,
-    size, payload, trailing sync — false marker matches inside
-    payloads are rejected) and continues, silently dropping only the
-    unreadable span. At 100 TB one flipped block must not kill a
-    1000-executor job when the operator opts into salvage semantics
-    (`read_boom(skip_corrupt=True)` — the
+    forward for the next validated block boundary (:func:`_next_block`)
+    and continues, silently dropping only the unreadable span; an
+    unreadable header yields nothing. At 100 TB one flipped block must
+    not kill a 1000-executor job when the operator opts into salvage
+    semantics (`read_boom(skip_corrupt=True)` — the
     `spark.sql.files.ignoreCorruptFiles` posture at block granularity).
     """
-    dec = _Decoder(data)
     try:
-        if dec.read_fixed(4) != MAGIC:
-            return
-        meta = dec.read_map_of_bytes()
-        schema = json.loads(meta["avro.schema"])
-        codec = meta.get("avro.codec", b"null").decode()
-        sync = dec.read_fixed(16)
+        schema, sync, pos, codec = _parse_boom_header(data)
     except Exception:  # noqa: BLE001 — unreadable header: nothing salvageable
         return
     n = len(data)
-    pos = dec.pos
-    while pos < n:
+    while pos is not None and pos < n:
         blk = _try_block(data, pos, sync, codec)
         if blk is None:
-            # resync: first validated boundary after the damage
-            search_from = pos
-            while True:
-                hit = data.find(sync, search_from, n)
-                if hit < 0:
-                    return
-                cand = hit + 16
-                if _try_block(data, cand, sync, codec) is not None:
-                    pos = cand
-                    break
-                search_from = hit + 1
+            pos = _next_block(data, pos, n, sync, codec)
             continue
-        payload, count, nxt = blk
+        payload, count, pos = blk
         yield schema, count, payload
-        pos = nxt
+
+
+def _decode_blocks(blocks) -> Iterator[dict]:
+    for schema, count, payload in blocks:
+        inner = _Decoder(payload)
+        for _ in range(count):
+            yield inner.decode(schema)
 
 
 def read_container_resync(data: bytes) -> Iterator[dict]:
@@ -252,10 +284,70 @@ def read_container_resync(data: bytes) -> Iterator[dict]:
 
 def read_container(data: bytes) -> Iterator[dict]:
     """Yield decoded records from an Avro object-container byte string."""
-    for schema, count, payload in read_container_blocks(data):
-        inner = _Decoder(payload)
-        for _ in range(count):
-            yield inner.decode(schema)
+    return _decode_blocks(read_container_blocks(data))
+
+
+def _term_matcher(search_terms: list[str], match_all: bool, case_insensitive: bool):
+    """FastSearch's two tests for ``search_terms``, mirroring the
+    reference's ``util/FastSearch.java:76`` SearchMapper (with
+    ``mapred/boom/BoomFilterMapper.java``'s per-line string match):
+    ``block_ok(payload)`` byte-scans a DECOMPRESSED block payload for
+    the UTF-8 term bytes (False ⇒ no line of the block can match, so
+    its record decode is skipped), ``line_ok(message)`` is the exact
+    per-line match. ``match_all`` requires every term (a line holding
+    all terms puts each term's bytes in its block, so requiring all of
+    them at block level is a safe prefilter); default is match-any.
+    Case-insensitive mode upper-cases both sides; non-ASCII terms can
+    change byte LENGTH when cased (the reference's ``unicode`` flag), so
+    they disable the byte prefilter."""
+    pick = all if match_all else any
+    if not case_insensitive:
+        raw = [t.encode("utf-8") for t in search_terms]
+        return (
+            lambda payload: pick([t in payload for t in raw]),
+            lambda msg: pick([t in msg for t in search_terms]),
+        )
+    upper = [t.upper() for t in search_terms]
+
+    def line_ok(msg: str) -> bool:
+        m = msg.upper()
+        return pick([t in m for t in upper])
+
+    if not all(t.isascii() for t in search_terms):
+        return (lambda payload: True), line_ok
+
+    def block_ok(payload: bytes) -> bool:
+        # ASCII terms match both cases on an upper-cased latin-1 view
+        hay = payload.decode("latin-1").upper()
+        return pick([t in hay for t in upper])
+
+    return block_ok, line_ok
+
+
+def _search_blocks(
+    blocks,
+    search_terms: list[str] | None,
+    match_all: bool = False,
+    case_insensitive: bool = False,
+    start_ms: int | None = None,
+    end_ms: int | None = None,
+) -> Iterator[tuple]:
+    """Flattened lines of (schema, count, payload) blocks; with
+    ``search_terms``, blocks failing the byte prefilter are never
+    record-decoded and lines are filtered exactly (:func:`_term_matcher`).
+    ``start_ms``/``end_ms`` bound block seconds."""
+    if search_terms is not None:
+        block_ok, line_ok = _term_matcher(search_terms, match_all, case_insensitive)
+        blocks = (b for b in blocks if block_ok(b[2]))
+    records = _decode_blocks(blocks)
+    if start_ms is not None:
+        records = (r for r in records if r["second"] * 1000 >= start_ms)
+    if end_ms is not None:
+        records = (r for r in records if r["second"] * 1000 < end_ms)
+    rows = flatten_log_blocks(records)
+    if search_terms is not None:
+        rows = (row for row in rows if line_ok(row[1]))
+    return rows
 
 
 def scan_boom_bytes(
@@ -268,72 +360,21 @@ def scan_boom_bytes(
 ) -> Iterator[tuple]:
     """FastSearch-parity filtered scan of one .bm byte string: flattened
     (ts, message, event_id, create_time, block_no, line_no) tuples for
-    lines containing the search term(s).
-
-    Two-phase, mirroring the reference's
-    ``util/FastSearch.java:76`` SearchMapper (with
-    ``mapred/boom/BoomFilterMapper.java``'s per-line string-match
-    semantics): (1) byte-scan the DECOMPRESSED block payload for the
-    UTF-8 pattern bytes and skip the whole block's record decode when no
-    term can match — on low-hit-rate greps this skips the expensive
-    Avro record walk for most blocks; (2) only matched blocks are
-    decoded, then lines are substring-filtered exactly. ``match_all``
-    requires every term (a line containing all terms implies each
-    term's bytes appear in its block, so requiring all terms at block
-    level is a safe prefilter); default is match-any. Case-insensitive
-    mode upper-cases both sides line-level and skips the byte prefilter
-    for non-ASCII terms (the reference's ``unicode`` fallback).
+    lines containing the search term(s) (match-any, or every term with
+    ``match_all``; see :func:`_term_matcher`). Only blocks whose payload
+    bytes can match are record-decoded — on low-hit-rate greps this
+    skips the expensive Avro record walk for most blocks.
     ``start_ms``/``end_ms`` bound block seconds like
     ``logdriver.search.start.time``/``end.time``.
     """
-    if case_insensitive:
-        # ASCII terms byte-scan both cases cheaply via .upper() on a
-        # decoded latin-1 view; non-ASCII upper/lower can change byte
-        # LENGTH (reference's `unicode` flag) → decode every block.
-        ascii_ok = all(t.isascii() for t in search_terms)
-        terms_upper = [t.upper() for t in search_terms]
-    else:
-        terms_bytes = [t.encode("utf-8") for t in search_terms]
-    want_all = match_all
-
-    for schema, count, payload in read_container_blocks(data):
-        if case_insensitive:
-            if ascii_ok:
-                hay = payload.decode("latin-1").upper()
-                hits = [t in hay for t in terms_upper]
-            else:
-                hits = [True] * len(search_terms)
-        else:
-            hits = [t in payload for t in terms_bytes]
-        if not (all(hits) if want_all else any(hits)):
-            continue
-        inner = _Decoder(payload)
-        for _ in range(count):
-            rec = inner.decode(schema)
-            second = rec["second"]
-            ts_base = second * 1000
-            if start_ms is not None and ts_base < start_ms:
-                continue
-            if end_ms is not None and ts_base >= end_ms:
-                continue
-            create_time = rec["createTime"]
-            block_no = rec["blockNumber"]
-            for line_no, line in enumerate(rec["logLines"]):
-                msg = line["message"]
-                if case_insensitive:
-                    m = msg.upper()
-                    ok = [t in m for t in terms_upper]
-                else:
-                    ok = [t in msg for t in search_terms]
-                if all(ok) if want_all else any(ok):
-                    yield (
-                        ts_base + line["ms"],
-                        msg,
-                        int(line.get("eventId", 0) or 0),
-                        create_time,
-                        block_no,
-                        line_no,
-                    )
+    return _search_blocks(
+        read_container_blocks(data),
+        search_terms,
+        match_all,
+        case_insensitive,
+        start_ms,
+        end_ms,
+    )
 
 
 def flatten_log_blocks(records: Iterator[dict]) -> Iterator[tuple]:
@@ -373,7 +414,7 @@ def count_boom_lines(path: str) -> int:
 
 def read_boom(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     search_terms: list[str] | None = None,
     match_all: bool = False,
     case_insensitive: bool = False,
@@ -384,6 +425,11 @@ def read_boom(
 ) -> DataFrame:
     """Distributed .bm read: binaryFile source → per-file Arrow-batched
     decode in executors → canonical log schema.
+
+    ``path`` is one directory (or file/glob) or a LIST of them, read in
+    ONE scan: the CLI passes every hourly directory of its window, and
+    Spark packs their files into about ``defaultParallelism`` splits
+    instead of one scan (and one task) per directory.
 
     ``search_terms`` pushes a substring search INTO the decoder
     (``scan_boom_bytes``): non-matching container blocks are skipped on
@@ -415,8 +461,6 @@ def read_boom(
             "the tree first, then search"
         )
 
-    cols = ["ts", "message", "event_id", "create_time", "block_no", "line_no"]
-
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for content in pdf["content"]:
@@ -446,7 +490,7 @@ def read_boom(
                     )
                 else:
                     rows = list(flatten_log_blocks(read_container(data)))
-                yield pd.DataFrame(rows, columns=cols)
+                yield pd.DataFrame(rows, columns=LOG_COLUMNS)
 
     # recursive=True reads a whole tree from ONE root path: a glob that
     # expands to many leaf dirs (an hourly tree is thousands) pushes
@@ -794,41 +838,26 @@ def write_boom_tree(
 # ---------------------------------------------------------------------------
 
 
-def _parse_boom_header(mm) -> tuple[dict, bytes, int, str]:
-    """(schema, sync, header_end, codec) from a mapped .bm file."""
-    head = bytes(mm[: min(len(mm), 1 << 20)])  # container headers are small
-    dec = _Decoder(head)
-    if dec.read_fixed(4) != MAGIC:
-        raise ValueError("not an Avro container file (bad magic)")
-    meta = dec.read_map_of_bytes()
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    if codec not in ("deflate", "null"):
-        raise ValueError(f"unsupported codec: {codec}")
-    sync = dec.read_fixed(16)
-    return schema, sync, dec.pos, codec
+def _range_blocks(mm, start: int, end: int) -> Iterator[tuple[dict, int, bytes]]:
+    """The (schema, count, payload) blocks one byte range owns.
 
-
-def _try_block(mm, pos: int, sync: bytes, codec: str):
-    """Attempt to parse the block starting at ``pos``; return
-    (records_payload, count, next_pos) or None if ``pos`` is not a real
-    block boundary (false sync match inside a payload)."""
-    try:
-        dec = _Decoder(mm)
-        dec.pos = pos
-        count = dec.read_long()
-        size = dec.read_long()
-        if count <= 0 or size <= 0 or dec.pos + size + 16 > len(mm):
-            return None
-        payload = bytes(mm[dec.pos : dec.pos + size])
-        dec.pos += size
-        if bytes(mm[dec.pos : dec.pos + 16]) != sync:
-            return None
-        if codec == "deflate":
-            payload = zlib.decompress(payload, -15)
-        return payload, count, dec.pos + 16
-    except Exception:  # noqa: BLE001 — any parse failure = not a boundary
-        return None
+    Ownership rule (the actual Avro DataFileReader contract): a block
+    belongs to the range that contains its PRECEDING sync marker's byte
+    offset. Every range — including the first — scans for the first
+    valid sync at offset ≥ start (the header's own sync is the marker
+    preceding block 1, so no header special-case: only the range
+    containing it reads block 1); a range whose first sync lies at/after
+    `end` owns nothing."""
+    schema, sync, _, codec = _parse_boom_header(mm)
+    end = min(end, len(mm))
+    pos = _next_block(mm, start, end, sync, codec)
+    # continue while the preceding sync offset (pos − 16) is ours
+    while pos is not None and pos - 16 < end:
+        blk = _try_block(mm, pos, sync, codec)
+        if blk is None:
+            return  # trailing corruption — stop at last good block
+        payload, count, pos = blk
+        yield schema, count, payload
 
 
 def scan_boom_range(
@@ -846,7 +875,7 @@ def scan_boom_range(
     syncing to the first marker at/after ``start`` (first range starts
     at the header end), which partitions every block to exactly one
     range with no gap or overlap — the upstream
-    ``DataFileReader.sync/pastSync`` contract.
+    ``DataFileReader.sync/pastSync`` contract (:func:`_range_blocks`).
 
     False-positive sync matches (the 16-byte marker appearing inside a
     compressed payload) are handled by VALIDATING each candidate: a
@@ -859,75 +888,12 @@ def scan_boom_range(
 
     with open(path, "rb") as f:
         with mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-            schema, sync, header_end, codec = _parse_boom_header(mm)
-            n = len(mm)
-            # Ownership rule (the actual Avro DataFileReader contract): a
-            # block belongs to the range that contains its PRECEDING sync
-            # marker's byte offset. Every range — including the first —
-            # scans for the first VALID sync at offset ≥ start (the
-            # header's own sync is the marker preceding block 1, so no
-            # header special-case: only the range containing it reads
-            # block 1); a range whose first sync lies at/after `end`
-            # owns nothing.
-            pos = None
-            search_from = start
-            while True:
-                hit = mm.find(sync, search_from, n)
-                if hit < 0 or hit >= end:
-                    return
-                cand = hit + 16
-                if _try_block(mm, cand, sync, codec) is not None:
-                    pos = cand
-                    break
-                search_from = hit + 1
-            if case_insensitive and search_terms is not None:
-                ascii_ok = all(t.isascii() for t in search_terms)
-                terms_upper = [t.upper() for t in search_terms]
-            elif search_terms is not None:
-                terms_bytes = [t.encode("utf-8") for t in search_terms]
-            # continue while the preceding sync offset (pos − 16) is ours
-            while pos is not None and pos - 16 < min(end, n):
-                blk = _try_block(mm, pos, sync, codec)
-                if blk is None:
-                    return  # trailing corruption — stop at last good block
-                payload, count, nxt = blk
-                if search_terms is not None:
-                    if case_insensitive:
-                        if ascii_ok:
-                            hay = payload.decode("latin-1").upper()
-                            hits = [t in hay for t in terms_upper]
-                        else:
-                            hits = [True] * len(search_terms)
-                    else:
-                        hits = [t in payload for t in terms_bytes]
-                    if not (all(hits) if match_all else any(hits)):
-                        pos = nxt
-                        continue
-                inner = _Decoder(payload)
-                for _ in range(count):
-                    rec = inner.decode(schema)
-                    second = rec["second"]
-                    create_time = rec["createTime"]
-                    block_no = rec["blockNumber"]
-                    for line_no, line in enumerate(rec["logLines"]):
-                        msg = line["message"]
-                        if search_terms is not None:
-                            if case_insensitive:
-                                mu = msg.upper()
-                                ok = [t in mu for t in terms_upper]
-                            else:
-                                ok = [t in msg for t in search_terms]
-                            if not (all(ok) if match_all else any(ok)):
-                                continue
-                        yield (
-                            second * 1000 + line["ms"],
-                            msg,
-                            int(line.get("eventId", 0) or 0),
-                            create_time,
-                            block_no,
-                            line_no,
-                        )
-                pos = nxt
+            yield from _search_blocks(
+                _range_blocks(mm, start, end),
+                search_terms,
+                match_all,
+                case_insensitive,
+            )
 
 
 def read_boom_split(
@@ -972,8 +938,6 @@ def read_boom_split(
             ranges.append((f, start, min(start + split_bytes, size)))
             start += split_bytes
     rdf = spark.createDataFrame(ranges, "path string, start long, end long")
-    cols = ["ts", "message", "event_id", "create_time", "block_no", "line_no"]
-
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for p, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):
@@ -985,7 +949,7 @@ def read_boom_split(
                         case_insensitive=case_insensitive,
                     )
                 )
-                yield pd.DataFrame(rows, columns=cols)
+                yield pd.DataFrame(rows, columns=LOG_COLUMNS)
 
     return rdf.repartition(max(len(ranges), 1)).mapInPandas(
         decode, schema=LOG_SCHEMA

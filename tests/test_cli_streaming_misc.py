@@ -163,8 +163,8 @@ def test_cli_logcat_matches_reference_golden(service_root):
 
 
 def test_cli_logcat_golden_forced_local_sort(cli_batch):
-    """--l (LogTools' client-local sort path) must produce the exact
-    same total order as the default auto pick."""
+    """--l (LogTools' client-local sort flag) is an accepted no-op: the
+    output keeps the exact total order of the default invocation."""
     assert cli_batch["local_sort"]["code"] == 0
     assert (
         cli_batch["local_sort"]["out"].splitlines()
@@ -173,8 +173,8 @@ def test_cli_logcat_golden_forced_local_sort(cli_batch):
 
 
 def test_cli_logcat_golden_forced_remote_sort(cli_batch):
-    """--r (the distributed range-sort path) must also match — same
-    answer either way, LogTools picks only for speed."""
+    """--r (LogTools' remote-sort flag) is an accepted no-op too: the
+    CLI picks the sort from the observed result size either way."""
     assert cli_batch["remote_sort"]["code"] == 0
     assert (
         cli_batch["remote_sort"]["out"].splitlines()
