@@ -13,7 +13,10 @@ Parity targets (re-derived from the PUBLIC Avro 1.x container spec):
   output's marker (``merge_avro_files`` here). Payloads are copied
   verbatim — no decompress/decode on the merge path.
 - ``avro/AvroFileHeader.java`` / ``avro/AvroUtils.java``: header
-  parse/serialize (``read_header`` / ``container_header_bytes``).
+  parse/serialize. The container codec (header parser and serializer,
+  block framer, block reader, record decoder) is the one in
+  ``sources/boom.py``; this module adds the schema-driven record
+  encoder, the Spark sources and the schema translation.
 
 Spark integration mirrors the boom source: ``binaryFile`` +
 ``mapInPandas`` so every file is processed Arrow-batched on an
@@ -29,12 +32,18 @@ from __future__ import annotations
 import json
 import os
 import struct
-import zlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bb_bigdata_log_tools_spark.sources.boom import MAGIC, _Decoder, _zigzag
+from bb_bigdata_log_tools_spark.sources.boom import (
+    _block_bytes,
+    _blocks,
+    _header_bytes,
+    _zigzag,
+    read_container,
+    read_header,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -42,35 +51,13 @@ from bb_bigdata_log_tools_spark.sources.boom import MAGIC, _Decoder, _zigzag
 # ---------------------------------------------------------------------------
 
 
-def read_header(data: bytes) -> tuple[dict, str, bytes, int]:
-    """Parse just the container header: returns (schema, codec, sync,
-    header_end_offset). Never touches block payloads."""
-    dec = _Decoder(data)
-    if dec.read_fixed(4) != MAGIC:
-        raise ValueError("not an Avro container file (bad magic)")
-    meta = dec.read_map_of_bytes()
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    sync = dec.read_fixed(16)
-    return schema, codec, sync, dec.pos
-
-
 def scan_blocks(data: bytes) -> Iterator[tuple[int, int, int, bytes]]:
     """Yield (block_idx, record_count, byte_size, raw_payload) for each
     block — the payload stays compressed; nothing is deserialized.
-    This is the AvroBlockRecordReader role."""
-    _schema, _codec, sync, pos = read_header(data)
-    dec = _Decoder(data)
-    dec.pos = pos
-    idx = 0
-    while dec.pos < len(dec.buf):
-        count = dec.read_long()
-        size = dec.read_long()
-        payload = dec.read_fixed(size)
-        if dec.read_fixed(16) != sync:
-            raise ValueError("sync marker mismatch — corrupt container")
-        yield idx, count, size, payload
-        idx += 1
+    This is the AvroBlockRecordReader role: the strict block reader in
+    raw mode, any codec."""
+    for idx, (_schema, count, raw) in enumerate(_blocks(data, raw=True)):
+        yield idx, count, len(raw), raw
 
 
 def avro_block_scan(spark: SparkSession, path: str, glob: str = "*.avro") -> DataFrame:
@@ -185,34 +172,6 @@ def _union_index(branches: list, value) -> int:
     raise ValueError("union has only null branches")
 
 
-def container_header_bytes(schema_json: str, codec: str, sync: bytes) -> bytes:
-    """Serialize a container header (AvroFileHeader.toBytes role)."""
-    out = bytearray(MAGIC)
-    meta = {"avro.schema": schema_json.encode(), "avro.codec": codec.encode()}
-    out += _zigzag(len(meta))
-    for k, v in meta.items():
-        kb = k.encode()
-        out += _zigzag(len(kb)) + kb + _zigzag(len(v)) + v
-    out += _zigzag(0)
-    out += sync
-    return bytes(out)
-
-
-def block_bytes(
-    schema, rows: list, codec: str, sync: bytes
-) -> bytes:
-    """Encode one container block (count, size, payload, sync)."""
-    enc = _Encoder()
-    for row in rows:
-        enc.encode(schema, row)
-    payload = bytes(enc.out)
-    if codec == "deflate":
-        payload = zlib.compress(payload, 6)[2:-4]
-    elif codec != "null":
-        raise ValueError(f"unsupported codec: {codec}")
-    return _zigzag(len(rows)) + _zigzag(len(payload)) + payload + sync
-
-
 def write_avro_local(
     path: str,
     schema_json: str,
@@ -224,9 +183,13 @@ def write_avro_local(
     """Write rows (dicts keyed by field name) to one container file."""
     schema = json.loads(schema_json)
     with open(path, "wb") as f:
-        f.write(container_header_bytes(schema_json, codec, sync))
+        f.write(_header_bytes(schema_json, codec, sync))
         for i in range(0, len(rows), records_per_block):
-            f.write(block_bytes(schema, rows[i : i + records_per_block], codec, sync))
+            enc = _Encoder()
+            block = rows[i : i + records_per_block]
+            for row in block:
+                enc.encode(schema, row)
+            f.write(_block_bytes(len(block), bytes(enc.out), codec, sync))
 
 
 # ---------------------------------------------------------------------------
@@ -270,14 +233,10 @@ def merge_avro_files(spark: SparkSession, paths: list[str], out_path: str) -> in
             for p, content in zip(pdf["path"], pdf["content"]):
                 local = os.path.realpath(str(p).removeprefix("file:"))
                 data = bytes(content)
+                # "null": the payload is framed as stored, never recompressed
                 segs = [
-                    (
-                        order[local],
-                        i,
-                        n,
-                        _zigzag(n) + _zigzag(sz) + raw + MERGE_SYNC,
-                    )
-                    for i, n, sz, raw in scan_blocks(data)
+                    (order[local], i, n, _block_bytes(n, raw, "null", MERGE_SYNC))
+                    for i, n, _sz, raw in scan_blocks(data)
                 ]
                 yield pd.DataFrame(
                     segs, columns=["file_order", "block_idx", "record_count", "seg"]
@@ -289,7 +248,7 @@ def merge_avro_files(spark: SparkSession, paths: list[str], out_path: str) -> in
         schema="file_order int, block_idx long, record_count long, seg binary",
     )
 
-    header = container_header_bytes(
+    header = _header_bytes(
         json.dumps(schema0, separators=(",", ":")), codec0, MERGE_SYNC
     )
     tmp_out = out_path + ".inprogress"
@@ -367,8 +326,6 @@ def read_avro(spark: SparkSession, path: str, glob: str = "*.avro") -> DataFrame
     (all files must agree — standard single-schema layout); decode runs
     Arrow-batched on executors via ``mapInPandas``."""
     import pandas as pd
-
-    from bb_bigdata_log_tools_spark.sources.boom import read_container
 
     binary = (
         spark.read.format("binaryFile")

@@ -1,5 +1,6 @@
 """Boom (.bm) log-file source: a from-scratch reader/writer for the
-reference's Avro-container log format.
+reference's Avro-container log format, and the one Avro container codec
+every container reader and writer in the package shares.
 
 Format parity (re-derived from the PUBLIC Avro 1.x container spec +
 the schema embedded in the files themselves):
@@ -7,16 +8,35 @@ the schema embedded in the files themselves):
 - Avro object-container file: magic ``Obj\\x01``, metadata map with
   ``avro.schema`` / ``avro.codec`` (deflate), 16-byte sync marker,
   then blocks of ``(record_count, byte_size, payload, sync)``.
-- Record schema (``/root/reference/src/com/blackberry/boom/schema/
-  LogBlock.java``): ``logBlock{second:long, createTime:long,
-  blockNumber:long, logLines:array<messageWithMillis{ms:long,
-  eventId:int, message:string}>}``.
-- Flattened line (``.../logdriver/boom/LogLineData.java``):
+- Record schema (the reference's ``boom/schema/LogBlock.java``):
+  ``logBlock{second:long, createTime:long, blockNumber:long,
+  logLines:array<messageWithMillis{ms:long, eventId:int,
+  message:string}>}``.
+- Flattened line (``logdriver/boom/LogLineData.java``):
   ``timestamp = second*1000 + ms``; ``line_no`` is the index of the
   line within its block.
 
-The decoder is generic (driven by the embedded writer schema), so files
-with or without ``eventId`` decode correctly.
+The container codec has one copy of each piece: one header parser
+(:func:`read_header`), one header serializer (:func:`_header_bytes`),
+one block framer (:func:`_block_bytes`), one block reader
+(:func:`_blocks`), one record-decode loop (:func:`_records`) and one
+line-to-block flush loop (:func:`_write_log_blocks`). The block reader
+has three modes that combine freely:
+
+- strict (the default): a damaged block reached by following the
+  block chain raises ``ValueError``;
+- salvage: damaged blocks are skipped by resyncing on the next
+  validated sync marker, and a record that fails to decode drops the
+  rest of its block only;
+- ranged: only the blocks a byte range ``[start, end)`` owns, under the
+  Avro split rule (a block belongs to the range holding its preceding
+  sync marker); the whole file is the default range.
+
+``sources/avro_generic.py`` reads and writes arbitrary-schema
+containers through the same codec; its raw-block paths take payloads
+as stored, whatever the codec. The record decoder is generic (driven by
+the embedded writer schema), so files with or without ``eventId``
+decode correctly.
 
 Spark integration: ``read_boom`` uses the built-in ``binaryFile`` source
 + ``mapInPandas`` — each .bm file is decoded Arrow-batched on an
@@ -33,6 +53,7 @@ import json
 import struct
 import zlib
 from collections.abc import Iterator
+from itertools import groupby
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -164,43 +185,105 @@ class _Decoder:
         raise ValueError(f"unsupported avro type: {schema!r}")
 
 
-def _parse_boom_header(data) -> tuple[dict, bytes, int, str]:
-    """(schema, sync, header_end, codec) of an Avro container held in
-    ``data`` (bytes or a mmap) — the one header parser every reader
-    shares. Raises ValueError on a bad magic or a codec other than
-    deflate/null; other damage raises whatever the decode hits."""
+def _zigzag(n: int) -> bytes:
+    n = (n << 1) ^ (n >> 63)
+    out = bytearray()
+    while True:
+        b = n & 0x7F
+        n >>= 7
+        if n:
+            out.append(b | 0x80)
+        else:
+            out.append(b)
+            return bytes(out)
+
+
+# ---------------------------------------------------------------------------
+# container codec: header, block framing, the block reader, record decode
+# ---------------------------------------------------------------------------
+
+
+def read_header(data) -> tuple[dict, str, bytes, int]:
+    """(schema, codec, sync, header_end) of an Avro container held in
+    ``data`` (bytes or a mmap) — the one header parser; any codec.
+    Raises ValueError on a bad magic; other damage raises whatever the
+    decode hits. Never touches block payloads."""
     dec = _Decoder(data)
     if dec.read_fixed(4) != MAGIC:
         raise ValueError("not an Avro container file (bad magic)")
     meta = dec.read_map_of_bytes()
     schema = json.loads(meta["avro.schema"])
     codec = meta.get("avro.codec", b"null").decode()
+    sync = dec.read_fixed(16)
+    return schema, codec, sync, dec.pos
+
+
+def _parse_boom_header(data) -> tuple[dict, bytes, int, str]:
+    """(schema, sync, header_end, codec): :func:`read_header` for the
+    decoding readers, which also reject a codec other than
+    deflate/null with ValueError."""
+    schema, codec, sync, header_end = read_header(data)
     if codec not in ("deflate", "null"):
         raise ValueError(f"unsupported codec: {codec}")
-    sync = dec.read_fixed(16)
-    return schema, sync, dec.pos, codec
+    return schema, sync, header_end, codec
+
+
+def _header_bytes(schema_json: str, codec: str, sync: bytes) -> bytes:
+    """Serialize a container header (AvroFileHeader.toBytes role)."""
+    out = bytearray(MAGIC)
+    meta = {"avro.schema": schema_json.encode(), "avro.codec": codec.encode()}
+    out += _zigzag(len(meta))
+    for k, v in meta.items():
+        kb = k.encode()
+        out += _zigzag(len(kb)) + kb + _zigzag(len(v)) + v
+    out += _zigzag(0)
+    out += sync
+    return bytes(out)
+
+
+def _block_bytes(count: int, body: bytes, codec: str, sync: bytes) -> bytes:
+    """Frame one container block: ``body`` (``count`` encoded records)
+    is raw-deflated for ``deflate`` or stored as given for ``null``."""
+    if codec == "deflate":
+        body = zlib.compress(body, 6)[2:-4]
+    elif codec != "null":
+        raise ValueError(f"unsupported codec: {codec}")
+    return _zigzag(count) + _zigzag(len(body)) + body + sync
+
+
+# what a damaged block raises while being parsed
+_DAMAGE = (ValueError, IndexError, zlib.error)
+
+
+def _read_block(dec: _Decoder, sync: bytes, codec: str) -> tuple[int, bytes]:
+    """(count, payload) of the block at ``dec.pos``, inflated for
+    ``deflate``; ``dec`` moves past its trailing sync marker. A real
+    block parses as (count > 0, size > 0, payload, sync); anything else
+    raises one of ``_DAMAGE``."""
+    count = dec.read_long()
+    size = dec.read_long()
+    start = dec.pos
+    stop = start + size
+    if count <= 0 or size <= 0 or dec.buf[stop : stop + 16] != sync:
+        raise ValueError("not a container block")
+    dec.pos = stop + 16
+    payload = dec.buf[start:stop]
+    if codec == "deflate":
+        payload = zlib.decompress(payload, -15)
+    return count, payload
 
 
 def _try_block(mm, pos: int, sync: bytes, codec: str):
-    """Attempt to parse the block starting at ``pos``; return
-    (records_payload, count, next_pos) or None if ``pos`` is not a real
-    block boundary (false sync match inside a payload)."""
+    """(payload, count, next_pos) of the block starting at ``pos``, or
+    None if ``pos`` is not a real block boundary (a damaged block, or a
+    false sync match inside a payload)."""
+    dec = _Decoder(mm)
+    dec.pos = pos
     try:
-        dec = _Decoder(mm)
-        dec.pos = pos
-        count = dec.read_long()
-        size = dec.read_long()
-        if count <= 0 or size <= 0 or dec.pos + size + 16 > len(mm):
-            return None
-        payload = bytes(mm[dec.pos : dec.pos + size])
-        dec.pos += size
-        if bytes(mm[dec.pos : dec.pos + 16]) != sync:
-            return None
-        if codec == "deflate":
-            payload = zlib.decompress(payload, -15)
-        return payload, count, dec.pos + 16
-    except Exception:  # noqa: BLE001 — any parse failure = not a boundary
+        count, payload = _read_block(dec, sync, codec)
+    except _DAMAGE:
         return None
+    return payload, count, dec.pos
 
 
 def _next_block(mm, search_from: int, limit: int, sync: bytes, codec: str):
@@ -217,74 +300,92 @@ def _next_block(mm, search_from: int, limit: int, sync: bytes, codec: str):
         search_from = hit + 1
 
 
-def read_container_blocks(data: bytes) -> Iterator[tuple[dict, int, bytes]]:
-    """Yield (writer_schema, record_count, decompressed_payload) per
-    container block — the seam that lets a search prefilter byte-scan a
-    block BEFORE paying for record decode (FastSearch parity; see
-    ``scan_boom_bytes``). Strict: any damage raises."""
-    schema, sync, pos, codec = _parse_boom_header(data)
-    dec = _Decoder(data)
-    dec.pos = pos
-    while dec.pos < len(data):
-        count = dec.read_long()
-        payload = dec.read_fixed(dec.read_long())
-        if codec == "deflate":
-            payload = zlib.decompress(payload, -15)
-        if dec.read_fixed(16) != sync:
-            raise ValueError("sync marker mismatch — corrupt container")
-        yield schema, count, payload
+def _blocks(
+    data,
+    start: int = 0,
+    end: int | None = None,
+    salvage: bool = False,
+    raw: bool = False,
+) -> Iterator[tuple[dict, int, bytes]]:
+    """The one block reader: (writer_schema, record_count, payload) for
+    each block of the container in ``data`` (bytes or a mmap) that the
+    byte range ``[start, end)`` owns; the whole file by default.
 
+    Ownership (the Avro ``DataFileReader.sync/pastSync`` contract): a
+    block belongs to the range holding its PRECEDING sync marker's
+    offset, so ranges that tile a file partition its blocks with no gap
+    or overlap. A range holding the header's sync marker starts at
+    block 1 and follows the block chain; any other range first finds
+    the first validated block after a marker at/after ``start``
+    (:func:`_next_block`).
 
-def read_container_blocks_resync(data: bytes) -> Iterator[tuple[dict, int, bytes]]:
-    """:func:`read_container_blocks` with sync-marker RESYNC past
-    corrupt blocks — the Avro container's sync markers exist precisely
-    so a reader can recover mid-stream. Where the strict reader raises
-    (fail the task, the default ingest posture), this one scans
-    forward for the next validated block boundary (:func:`_next_block`)
-    and continues, silently dropping only the unreadable span; an
-    unreadable header yields nothing. At 100 TB one flipped block must
-    not kill a 1000-executor job when the operator opts into salvage
-    semantics (`read_boom(skip_corrupt=True)` — the
-    `spark.sql.files.ignoreCorruptFiles` posture at block granularity).
-    """
+    Strict by default: a block reached along the chain that does not
+    parse raises ValueError. ``salvage`` resyncs past it on the next
+    validated block instead, and an unreadable header yields nothing —
+    the ``spark.sql.files.ignoreCorruptFiles`` posture at block
+    granularity. Payloads are inflated, and a codec other than
+    deflate/null is rejected before any block; ``raw`` instead yields
+    payloads as stored, whatever the codec (the block-level Avro
+    paths, which never decompress)."""
     try:
-        schema, sync, pos, codec = _parse_boom_header(data)
-    except Exception:  # noqa: BLE001 — unreadable header: nothing salvageable
-        return
+        if raw:
+            schema, _codec, sync, header_end = read_header(data)
+            codec = "null"  # payloads are passed on as stored
+        else:
+            schema, sync, header_end, codec = _parse_boom_header(data)
+    except Exception:  # noqa: BLE001 — any header damage
+        if salvage:
+            return
+        raise
     n = len(data)
-    while pos is not None and pos < n:
-        blk = _try_block(data, pos, sync, codec)
-        if blk is None:
-            pos = _next_block(data, pos, n, sync, codec)
+    end = n if end is None else min(end, n)
+    dec = _Decoder(data)
+    if start <= header_end - 16:
+        dec.pos = header_end
+    else:
+        dec.pos = _next_block(data, start, end, sync, codec)
+        if dec.pos is None:
+            return
+    # continue while the preceding sync offset (pos - 16) is ours
+    while dec.pos < n and dec.pos - 16 < end:
+        at = dec.pos
+        try:
+            count, payload = _read_block(dec, sync, codec)
+        except _DAMAGE as e:
+            if not salvage:
+                raise ValueError(f"corrupt container block at byte {at}") from e
+            dec.pos = _next_block(data, at, end, sync, codec)
+            if dec.pos is None:
+                return
             continue
-        payload, count, pos = blk
         yield schema, count, payload
 
 
-def _decode_blocks(blocks) -> Iterator[dict]:
-    for schema, count, payload in blocks:
-        inner = _Decoder(payload)
-        for _ in range(count):
-            yield inner.decode(schema)
-
-
-def read_container_resync(data: bytes) -> Iterator[dict]:
-    """Decoded records via the resyncing block reader; a record-level
-    decode failure inside a validated block drops the REST of that
-    block only (varint streams cannot re-align mid-block — the next
+def _records(blocks, salvage: bool = False) -> Iterator[dict]:
+    """The one record-decode loop over (schema, count, payload) blocks.
+    Under ``salvage`` a record that fails to decode drops the REST of
+    its block only (varint streams cannot re-align mid-block; the next
     sync is the recovery point)."""
-    for schema, count, payload in read_container_blocks_resync(data):
-        inner = _Decoder(payload)
+    for schema, count, payload in blocks:
+        dec = _Decoder(payload)
         try:
             for _ in range(count):
-                yield inner.decode(schema)
-        except Exception:  # noqa: BLE001 — skip the block's damaged tail
-            continue
+                yield dec.decode(schema)
+        except Exception:  # noqa: BLE001 — any record damage
+            if not salvage:
+                raise
 
 
 def read_container(data: bytes) -> Iterator[dict]:
-    """Yield decoded records from an Avro object-container byte string."""
-    return _decode_blocks(read_container_blocks(data))
+    """Yield decoded records from an Avro object-container byte string;
+    strict: any damage raises."""
+    return _records(_blocks(data))
+
+
+def read_container_resync(data: bytes) -> Iterator[dict]:
+    """:func:`read_container` in salvage mode: never raises on damaged
+    blocks or records, dropping only what cannot be read."""
+    return _records(_blocks(data, salvage=True), salvage=True)
 
 
 def _term_matcher(search_terms: list[str], match_all: bool, case_insensitive: bool):
@@ -331,15 +432,17 @@ def _search_blocks(
     case_insensitive: bool = False,
     start_ms: int | None = None,
     end_ms: int | None = None,
+    salvage: bool = False,
 ) -> Iterator[tuple]:
     """Flattened lines of (schema, count, payload) blocks; with
     ``search_terms``, blocks failing the byte prefilter are never
     record-decoded and lines are filtered exactly (:func:`_term_matcher`).
-    ``start_ms``/``end_ms`` bound block seconds."""
+    ``start_ms``/``end_ms`` bound block seconds; ``salvage`` is
+    :func:`_records`'."""
     if search_terms is not None:
         block_ok, line_ok = _term_matcher(search_terms, match_all, case_insensitive)
         blocks = (b for b in blocks if block_ok(b[2]))
-    records = _decode_blocks(blocks)
+    records = _records(blocks, salvage)
     if start_ms is not None:
         records = (r for r in records if r["second"] * 1000 >= start_ms)
     if end_ms is not None:
@@ -368,7 +471,7 @@ def scan_boom_bytes(
     ``logdriver.search.start.time``/``end.time``.
     """
     return _search_blocks(
-        read_container_blocks(data),
+        _blocks(data),
         search_terms,
         match_all,
         case_insensitive,
@@ -416,15 +519,13 @@ def read_boom(
     spark: SparkSession,
     path: str | list[str],
     search_terms: list[str] | None = None,
-    match_all: bool = False,
     case_insensitive: bool = False,
-    start_ms: int | None = None,
-    end_ms: int | None = None,
     skip_corrupt: bool = False,
     recursive: bool = False,
 ) -> DataFrame:
     """Distributed .bm read: binaryFile source → per-file Arrow-batched
-    decode in executors → canonical log schema.
+    decode in executors → canonical log schema. Each file goes through
+    the one block reader (:func:`_blocks`) over its whole byte range.
 
     ``path`` is one directory (or file/glob) or a LIST of them, read in
     ONE scan: the CLI passes every hourly directory of its window, and
@@ -435,18 +536,20 @@ def read_boom(
     (``scan_boom_bytes``): non-matching container blocks are skipped on
     a byte-scan of the compressed-block payload before any Avro record
     decode — the reference's FastSearch fast path
-    (``util/FastSearch.java:76``). Semantically identical to reading
+    (``util/FastSearch.java:76``), matching any term (case-folded with
+    ``case_insensitive``). Semantically identical to reading
     everything then filtering (``log_search``'s contract), so callers
     may use it as a drop-in accelerator. On parquet-resident logs
     Catalyst's pushdown covers this; the seam exists for legacy .bm
     trees where the scan cost lives inside our own decoder.
 
-    ``skip_corrupt=True`` opts into SALVAGE semantics for damaged
-    trees: corrupt container blocks are resynced past via the Avro
-    sync markers (:func:`read_container_blocks_resync`) instead of
-    failing the task, and a file with an unreadable header yields
-    zero rows — the ``spark.sql.files.ignoreCorruptFiles`` posture at
-    block granularity, for when one flipped block must not kill a
+    Reads are strict by default: a damaged block fails the task.
+    ``skip_corrupt=True`` opts into the block reader's SALVAGE mode for
+    damaged trees: corrupt container blocks are resynced past via the
+    Avro sync markers instead of failing the task, and a file whose
+    header (or schema) cannot be read yields zero rows — the
+    ``spark.sql.files.ignoreCorruptFiles`` posture at block
+    granularity, for when one flipped block must not kill a
     1000-executor ingest. Default OFF: silent data loss is the wrong
     default, and the maintenance integrity checks rely on strict
     reads. Mutually exclusive with ``search_terms`` (the push-down
@@ -464,32 +567,24 @@ def read_boom(
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for content in pdf["content"]:
-                data = bytes(content)
-                if skip_corrupt:
+                try:
+                    rows = list(
+                        _search_blocks(
+                            _blocks(bytes(content), salvage=skip_corrupt),
+                            search_terms,
+                            case_insensitive=case_insensitive,
+                            salvage=skip_corrupt,
+                        )
+                    )
+                except Exception:  # noqa: BLE001
                     # file-level fallback on top of block-level resync:
                     # a mutated header can even yield a DIFFERENT valid
                     # schema whose records don't flatten — under salvage
                     # semantics that file contributes zero rows, it
                     # never kills the task
-                    try:
-                        rows = list(
-                            flatten_log_blocks(read_container_resync(data))
-                        )
-                    except Exception:  # noqa: BLE001
-                        rows = []
-                elif search_terms is not None:
-                    rows = list(
-                        scan_boom_bytes(
-                            data,
-                            search_terms,
-                            match_all=match_all,
-                            case_insensitive=case_insensitive,
-                            start_ms=start_ms,
-                            end_ms=end_ms,
-                        )
-                    )
-                else:
-                    rows = list(flatten_log_blocks(read_container(data)))
+                    if not skip_corrupt:
+                        raise
+                    rows = []
                 yield pd.DataFrame(rows, columns=LOG_COLUMNS)
 
     # recursive=True reads a whole tree from ONE root path: a glob that
@@ -512,19 +607,6 @@ def read_boom(
 # ---------------------------------------------------------------------------
 
 
-def _zigzag(n: int) -> bytes:
-    n = (n << 1) ^ (n >> 63)
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 BOOM_SCHEMA_JSON = (
     '{"type":"record","name":"logBlock","fields":['
     '{"name":"second","type":"long"},'
@@ -538,37 +620,32 @@ BOOM_SCHEMA_JSON = (
 )
 
 
-def _write_container_header(f, sync: bytes) -> None:
-    f.write(MAGIC)
-    meta = {
-        "avro.schema": BOOM_SCHEMA_JSON.encode(),
-        "avro.codec": b"deflate",
-    }
-    f.write(_zigzag(len(meta)))
-    for k, v in meta.items():
-        kb = k.encode()
-        f.write(_zigzag(len(kb)) + kb + _zigzag(len(v)) + v)
-    f.write(_zigzag(0))
-    f.write(sync)
+def _second(line) -> int:
+    return line[0] // 1000
 
 
-def _write_block(
-    f, sync: bytes, second: int, create_time: int, block_no: int, blk: list[tuple]
-) -> None:
-    """Encode one logBlock as one deflate-compressed container block.
-    ``blk`` holds (ts, message, event_id) with ts // 1000 == second."""
-    body = bytearray()
-    body += _zigzag(second) + _zigzag(create_time) + _zigzag(block_no)
-    body += _zigzag(len(blk))
-    for ts, message, event_id in blk:
-        mb = message.encode("utf-8")
-        body += _zigzag(ts % 1000) + _zigzag(event_id)
-        body += _zigzag(len(mb)) + mb
-    body += _zigzag(0)  # array terminator
-    compressed = zlib.compress(bytes(body), 6)[2:-4]  # raw deflate
-    f.write(_zigzag(1) + _zigzag(len(compressed)))
-    f.write(compressed)
-    f.write(sync)
+def _write_log_blocks(path: str, blocks, sync: bytes) -> int:
+    """The one line-to-block writer: one deflate container block per
+    (second, create_time, block_no, lines) item of ``blocks``, each
+    line (ts, message[, event_id]) with ts // 1000 == second. Memory is
+    bounded by one block. Returns the line count."""
+    n = 0
+    with open(path, "wb") as f:
+        f.write(_header_bytes(BOOM_SCHEMA_JSON, "deflate", sync))
+        for second, create_time, block_no, lines in blocks:
+            lines = list(lines)
+            body = bytearray()
+            body += _zigzag(second) + _zigzag(create_time) + _zigzag(block_no)
+            body += _zigzag(len(lines))
+            for line in lines:
+                mb = line[1].encode("utf-8")
+                event_id = line[2] if len(line) > 2 else 0
+                body += _zigzag(line[0] % 1000) + _zigzag(event_id)
+                body += _zigzag(len(mb)) + mb
+            body += _zigzag(0)  # array terminator
+            f.write(_block_bytes(1, bytes(body), "deflate", sync))
+            n += len(lines)
+    return n
 
 
 def write_boom_stream(
@@ -577,35 +654,21 @@ def write_boom_stream(
     create_time: int = 0,
     sync: bytes = b"\x00" * 16,
 ) -> int:
-    """Streaming .bm writer over an ITERATOR of (ts, message, event_id)
+    """Streaming .bm writer over an ITERATOR of (ts, message[, event_id])
     tuples whose seconds (ts // 1000) arrive in non-decreasing order.
 
     One logBlock (= one deflate container block) is flushed per distinct
-    second, so memory is bounded by one second of lines regardless of
-    input size — this is what lets compaction run executor-side over an
-    arbitrarily large sorted partition. Returns the line count.
+    second, numbered from 0, so memory is bounded by one second of lines
+    regardless of input size — this is what lets compaction run
+    executor-side over an arbitrarily large sorted partition. Returns
+    the line count.
     """
-    with open(path, "wb") as f:
-        _write_container_header(f, sync)
-        n = 0
-        block_no = 0
-        cur_second: int | None = None
-        blk: list[tuple] = []
-        for line in lines:
-            ts, message = line[0], line[1]
-            event_id = line[2] if len(line) > 2 else 0
-            sec = ts // 1000
-            if sec != cur_second:
-                if cur_second is not None:
-                    _write_block(f, sync, cur_second, create_time, block_no, blk)
-                    block_no += 1
-                cur_second = sec
-                blk = []
-            blk.append((ts, message, event_id))
-            n += 1
-        if cur_second is not None:
-            _write_block(f, sync, cur_second, create_time, block_no, blk)
-    return n
+    seconds = groupby(lines, key=_second)
+    return _write_log_blocks(
+        path,
+        ((sec, create_time, no, blk) for no, (sec, blk) in enumerate(seconds)),
+        sync,
+    )
 
 
 def write_reboom_stream(
@@ -625,23 +688,8 @@ def write_reboom_stream(
     (createTime, blockNumber) pairs survive the round trip. Streaming:
     memory is bounded by one block. Returns the line count.
     """
-    with open(path, "wb") as f:
-        _write_container_header(f, sync)
-        n = 0
-        cur: tuple | None = None  # (second, create_time, block_no)
-        blk: list[tuple] = []
-        for ts, message, event_id, create_time, block_no in lines:
-            key = (ts // 1000, create_time, block_no)
-            if key != cur:
-                if cur is not None:
-                    _write_block(f, sync, cur[0], cur[1], cur[2], blk)
-                cur = key
-                blk = []
-            blk.append((ts, message, event_id))
-            n += 1
-        if cur is not None:
-            _write_block(f, sync, cur[0], cur[1], cur[2], blk)
-    return n
+    runs = groupby(lines, key=lambda line: (line[0] // 1000, line[3], line[4]))
+    return _write_log_blocks(path, ((*key, blk) for key, blk in runs), sync)
 
 
 def write_boom_local(
@@ -650,24 +698,16 @@ def write_boom_local(
     create_time: int = 0,
     sync: bytes = b"\x00" * 16,
 ) -> None:
-    """Write flattened (ts, message, event_id) lines to a .bm file.
+    """Write flattened (ts, message[, event_id]) lines to a .bm file.
 
     Lines are grouped into one logBlock per distinct second (the
     reference writer's second-level blocking), blocks ordered by second,
-    within-second input order preserved; delegates to the streaming
-    writer for the container encoding.
+    within-second input order preserved (a stable sort); delegates to
+    the streaming writer for the container encoding.
     """
-    by_second: dict[int, list[tuple]] = {}
-    for line in lines:
-        ts, message = line[0], line[1]
-        event_id = line[2] if len(line) > 2 else 0
-        by_second.setdefault(ts // 1000, []).append((ts, message, event_id))
-
-    def ordered():
-        for _, blk_lines in sorted(by_second.items()):
-            yield from blk_lines
-
-    write_boom_stream(path, ordered(), create_time=create_time, sync=sync)
+    write_boom_stream(
+        path, sorted(lines, key=_second), create_time=create_time, sync=sync
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -838,28 +878,6 @@ def write_boom_tree(
 # ---------------------------------------------------------------------------
 
 
-def _range_blocks(mm, start: int, end: int) -> Iterator[tuple[dict, int, bytes]]:
-    """The (schema, count, payload) blocks one byte range owns.
-
-    Ownership rule (the actual Avro DataFileReader contract): a block
-    belongs to the range that contains its PRECEDING sync marker's byte
-    offset. Every range — including the first — scans for the first
-    valid sync at offset ≥ start (the header's own sync is the marker
-    preceding block 1, so no header special-case: only the range
-    containing it reads block 1); a range whose first sync lies at/after
-    `end` owns nothing."""
-    schema, sync, _, codec = _parse_boom_header(mm)
-    end = min(end, len(mm))
-    pos = _next_block(mm, start, end, sync, codec)
-    # continue while the preceding sync offset (pos − 16) is ours
-    while pos is not None and pos - 16 < end:
-        blk = _try_block(mm, pos, sync, codec)
-        if blk is None:
-            return  # trailing corruption — stop at last good block
-        payload, count, pos = blk
-        yield schema, count, payload
-
-
 def scan_boom_range(
     path: str,
     start: int,
@@ -868,14 +886,13 @@ def scan_boom_range(
     match_all: bool = False,
     case_insensitive: bool = False,
 ) -> Iterator[tuple]:
-    """Decode the blocks of one BYTE RANGE of a .bm file — the Avro
-    split algorithm (the reference reads whole files per mapper via
-    ``AvroBlockInputFormat``; real Avro readers split): a task owns the
-    blocks whose start offset s satisfies ``s < end + 16`` after
-    syncing to the first marker at/after ``start`` (first range starts
-    at the header end), which partitions every block to exactly one
-    range with no gap or overlap — the upstream
-    ``DataFileReader.sync/pastSync`` contract (:func:`_range_blocks`).
+    """Decode the blocks of one BYTE RANGE ``[start, end)`` of a .bm
+    file — the Avro split algorithm (the reference reads whole files per
+    mapper via ``AvroBlockInputFormat``; real Avro readers split): the
+    block reader in ranged, strict mode (:func:`_blocks`), so a range
+    owns the blocks whose preceding sync marker it holds and ranges
+    that tile a file partition its blocks with no gap or overlap — the
+    upstream ``DataFileReader.sync/pastSync`` contract.
 
     False-positive sync matches (the 16-byte marker appearing inside a
     compressed payload) are handled by VALIDATING each candidate: a
@@ -889,7 +906,7 @@ def scan_boom_range(
     with open(path, "rb") as f:
         with mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
             yield from _search_blocks(
-                _range_blocks(mm, start, end),
+                _blocks(mm, start, end),
                 search_terms,
                 match_all,
                 case_insensitive,
@@ -900,9 +917,6 @@ def read_boom_split(
     spark: SparkSession,
     path: str,
     split_bytes: int = 64 * 1024 * 1024,
-    search_terms: list[str] | None = None,
-    match_all: bool = False,
-    case_insensitive: bool = False,
 ) -> DataFrame:
     """Distributed .bm read with SYNC-MARKER SPLITTING: multi-GB files
     fan out across ``ceil(size / split_bytes)`` tasks instead of one
@@ -914,9 +928,19 @@ def read_boom_split(
     ranges) — same ownership rule, Spark-side.
 
     The driver lists files and fabricates byte ranges; each task mmap's
-    its file and decodes only its range's blocks
-    (:func:`scan_boom_range`). Paths must be reachable from executors
-    (shared FS / mount — the same contract as the tree writers).
+    its file and decodes only its range's blocks with the strict block
+    reader (:func:`scan_boom_range`). Paths must be reachable from
+    executors (shared FS / mount — the same contract as the tree
+    writers).
+
+    Strictness: the range holding the header follows the block chain,
+    so a damaged block on it fails the task, and so does a damaged
+    block that a range reaches by following the chain from its first
+    block. A range that starts mid-file finds that first block by a
+    validated sync search, so a damaged block right after its first
+    marker cannot be told from a false marker match: it is passed over.
+    Only ``split_bytes`` ≥ the file size reads every block along the
+    chain.
     """
     import os as _os
 
@@ -941,14 +965,7 @@ def read_boom_split(
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for p, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):
-                rows = list(
-                    scan_boom_range(
-                        str(p), int(s), int(e),
-                        search_terms=search_terms,
-                        match_all=match_all,
-                        case_insensitive=case_insensitive,
-                    )
-                )
+                rows = list(scan_boom_range(str(p), int(s), int(e)))
                 yield pd.DataFrame(rows, columns=LOG_COLUMNS)
 
     return rdf.repartition(max(len(ranges), 1)).mapInPandas(
